@@ -68,7 +68,7 @@ import json
 import re
 from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..core.model import (
     Partition,
@@ -563,8 +563,12 @@ _LOCAL_CC_PAIR_CAP = 100_000
 
 # id types whose Python ordering provably equals Spark's min() ordering
 # (ints trivially; str because UTF-8 byte order == codepoint order) —
-# anything else falls back to the distributed run
-_LOCAL_CC_ID_TYPES = ("byte", "short", "integer", "long", "string")
+# anything else falls back to the distributed run.  Compared by EQUALITY,
+# not type name: a collated string (e.g. UTF8_LCASE) is also "string" by
+# name, but Spark's min() then orders by the collation, not by codepoint
+_LOCAL_CC_ID_TYPES = (
+    T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(), T.StringType(),
+)
 
 
 def _local_components(spark, edges, id_col: str, n_pairs: int):
@@ -581,7 +585,7 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
     f_a, f_b = edges.schema.fields[0], edges.schema.fields[1]
     if (
         f_a.dataType != f_b.dataType
-        or f_a.dataType.typeName() not in _LOCAL_CC_ID_TYPES
+        or f_a.dataType not in _LOCAL_CC_ID_TYPES
     ):
         return None
     rows = edges.collect()
@@ -615,8 +619,6 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
         if m is None or v < m:
             min_of[root] = v
     out = [(v, min_of[find(v)]) for v in parent]
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField(id_col, f_a.dataType),

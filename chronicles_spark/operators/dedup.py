@@ -113,33 +113,45 @@ def lineage_barrier(
     return df.localCheckpoint(eager=eager)
 
 
+def in_list_sql(col: str, values) -> str | None:
+    """SQL text of ``col IN (...)`` for :func:`in_list` and callers that
+    splice the predicate into a larger parsed fragment.  Ints render
+    with the ``L`` suffix (exact bigint literals, matching the id
+    columns' type); strings are backslash-escaped.  Returns ``None``
+    when a value cannot be rendered (not an int/str, or a string with
+    control characters — never produced by the id/key generators)."""
+    rendered = []
+    for v in values:
+        if isinstance(v, bool) or not isinstance(v, (int, str)):
+            return None
+        if isinstance(v, int):
+            rendered.append(f"{v}L")
+        else:
+            if any(ord(ch) < 32 for ch in v):
+                return None
+            rendered.append(
+                "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            )
+    return f"`{col}` IN ({','.join(rendered)})"
+
+
 def in_list(col: str, values) -> Column:
     """``col IN (...)`` built from ONE parsed SQL fragment.
 
     ``Column.isin`` pays one py4j ``lit`` round-trip per value — at the
     10k-id pushdown caps that is seconds of driver-side plan
     CONSTRUCTION per read (the round-15 profile's verify-gap).  One
-    ``F.expr`` parse yields the same ``In`` predicate (identical
-    semantics AND the same parquet row-group pushdown).  Ints render
-    with the ``L`` suffix (exact bigint literals, matching the id
-    columns' type); strings are backslash-escaped.  Values with control
-    characters (never produced by the id/key generators) fall back to
-    the per-element ``isin`` build."""
-    rendered = []
-    for v in values:
-        if isinstance(v, bool) or not isinstance(v, (int, str)):
-            return F.col(col).isin(list(values))
-        if isinstance(v, int):
-            rendered.append(f"{v}L")
-        else:
-            if any(ord(ch) < 32 for ch in v):
-                return F.col(col).isin(list(values))
-            rendered.append(
-                "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-            )
-    if not rendered:
+    ``F.expr`` parse of :func:`in_list_sql` yields the same ``In``
+    predicate (identical semantics AND the same parquet row-group
+    pushdown).  Values it cannot render fall back to the per-element
+    ``isin`` build."""
+    values = list(values)
+    if not values:
         return F.lit(False)
-    return F.expr(f"`{col}` IN ({','.join(rendered)})")
+    sql = in_list_sql(col, values)
+    if sql is None:
+        return F.col(col).isin(values)
+    return F.expr(sql)
 
 
 def shingle_base(
@@ -181,45 +193,39 @@ def exact_duplicate_groups(df: DataFrame, key: Column, id_col: str = "doc_id") -
 # MinHash + LSH
 
 
-def _salted_md5(prefix: str):
-    """One-arg transform lambda via a REAL closure.  The old
-    ``lambda s, i=i: ... f"{i}|" ...`` spelling was the documented
-    F.transform trap twice over: a two-parameter lambda makes Spark pass
-    (element, INDEX) — so ``i`` bound the index Column, whose repr
-    (``Column<'y_10'>``, counter varies per invocation) became the salt
-    via the f-string.  Signatures were self-consistent within one query
-    (each i still got a distinct salt) but NON-DETERMINISTIC across
-    invocations — harmless for one-shot dedup (exact verify masks
-    candidate-set wobble), fatal for the incremental dedup index, whose
-    extends must reproduce the build's band keys bit-for-bit."""
-    return lambda s: F.md5(F.concat(F.lit(prefix), s))
+def minhash_signature_sql(num_hashes: int, shingle_col: str = "shingles") -> list[str]:
+    """num_hashes min-hash projections ``sig_0..sig_{n-1}`` as SQL text:
+    per hash i, the lexicographic min of md5('<i>|' || shingle).
+    Map-side only; reads the materialized shingle column (one md5 pass
+    per hash function is inherent to MinHash — the shingle ARRAY itself
+    is never recomputed).  Deterministic across sessions/invocations
+    (the dedup index contract; also what the DuckDB oracles compute):
+    the salt is literal text, never a Python closure over a loop
+    variable.
+
+    Parsed text rather than a Column tree: each ``F.*`` call is a py4j
+    round trip, and a Column-built 8×2 banding costs ~1.7k of them
+    against ~40 parsed (pinned in ``tests/test_plan_construction.py``)
+    — it was the driver-side bulk of a dedup-index extend.  The parser
+    yields the same Catalyst expressions (lambda variable names aside),
+    so band keys are bit-identical."""
+    return [
+        f"array_min(transform(`{shingle_col}`, s -> md5(concat('{i}|', s)))) "
+        f"AS sig_{i}"
+        for i in range(num_hashes)
+    ]
 
 
-def minhash_signature(num_hashes: int, shingle_col: str = "shingles") -> list[Column]:
-    """num_hashes min-hash values as columns sig_0..sig_{n-1}: per hash i,
-    the lexicographic min of md5('<i>|' || shingle). Map-side only; reads
-    the materialized shingle column (one md5 pass per hash function is
-    inherent to MinHash — the shingle ARRAY itself is never recomputed).
-    Deterministic across sessions/invocations (the dedup index contract;
-    also what the DuckDB oracles compute)."""
-    out = []
-    for i in range(num_hashes):
-        out.append(
-            F.array_min(
-                F.transform(F.col(shingle_col), _salted_md5(f"{i}|"))
-            ).alias(f"sig_{i}")
-        )
-    return out
-
-
-def lsh_band_keys(bands: int, rows: int) -> list[Column]:
-    """Band keys: md5 of the concatenated signature slice per band. Each
-    sig_i feeds exactly one band — disjoint slices, no re-evaluation."""
-    out = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows + r}") for r in range(rows)]
-        out.append(F.md5(F.concat_ws("|", *cols)).alias(f"band_{b}"))
-    return out
+def lsh_band_keys_sql(bands: int, rows: int) -> list[str]:
+    """Band keys as SQL text: md5 of the concatenated signature slice per
+    band. Each sig_i feeds exactly one band — disjoint slices, no
+    re-evaluation."""
+    return [
+        "md5(concat_ws('|', "
+        + ", ".join(f"sig_{b * rows + r}" for r in range(rows))
+        + "))"
+        for b in range(bands)
+    ]
 
 
 def lsh_banded(
@@ -238,21 +244,20 @@ def lsh_banded(
     band key (md5 of the empty concat) and bucket every short doc with
     every other — exact-verify would reject the pairs anyway (the
     DuckDB oracles' ``WHERE len(shingles) > 0`` filter, made structural
-    here)."""
-    sigs = base.where(F.size("shingles") > 0).select(
-        F.col(id_col), *minhash_signature(bands * rows)
+    here).  Every projection is parsed SQL text
+    (:func:`minhash_signature_sql`): a few dozen py4j round trips to
+    build, not thousands."""
+    idq = f"`{id_col}`"
+    sigs = base.where("size(shingles) > 0").selectExpr(
+        idq, *minhash_signature_sql(bands * rows)
     )
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), k.alias("band_key"))
-                    for b, k in enumerate(lsh_band_keys(bands, rows))
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "bk.band_id", "bk.band_key")
+    structs = ", ".join(
+        f"named_struct('band_id', {b}, 'band_key', {k})"
+        for b, k in enumerate(lsh_band_keys_sql(bands, rows))
+    )
+    return sigs.selectExpr(idq, f"explode(array({structs})) AS bk").selectExpr(
+        idq, "bk.band_id", "bk.band_key"
+    )
 
 
 def minhash_lsh_candidates(
@@ -595,7 +600,7 @@ def sign_lsh_banded(
     subsets, nothing re-evaluated), then explode ``bands`` rows per
     vector with band_key = the band's concatenated bit string.
     Deterministic across sessions/invocations given (n_planes, dim) —
-    the same contract :func:`minhash_signature` keeps for text."""
+    the same contract :func:`minhash_signature_sql` keeps for text."""
     from .similarity import _lit_array, hyperplane_signs
 
     planes = hyperplane_signs(n_planes, dim)

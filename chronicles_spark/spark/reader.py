@@ -93,6 +93,7 @@ def read_version(
     keep_version_column: bool = False,
     infer_partition_types: bool = True,
     stats_filter=None,
+    schema=None,
 ) -> DataFrame:
     """Read a specific resolved state (current or historical).
 
@@ -108,7 +109,18 @@ def read_version(
     :mod:`chronicles_spark.spark.stats`; directories without sidecars are
     kept).  It is a PLANNING optimization, not a row filter — apply the
     real predicate with ``.where`` as usual.  An empty post-prune list
-    returns an empty DataFrame with the correct schema."""
+    returns an empty DataFrame with the correct schema.
+
+    ``schema`` (internal plumbing for read-modify-write loops that read
+    one table many times): the table's FULL read schema — data columns,
+    partition columns and ``_version``, as a ``keep_version_column=True``
+    read returns it.  Every type, the partition columns' included, then
+    comes from ``schema``: Spark runs no schema-inference job (one
+    footer-reading job per read otherwise), and partition values are
+    cast to the given types without inference, so
+    ``infer_partition_types`` is moot and the session-conf swap and its
+    lock are skipped.  The caller owns the schema's agreement with the
+    stored files."""
     paths_ = live_paths(table, table_version)
     if not paths_:
         raise ValueError(f"table {table.name} has no live data (empty state)")
@@ -125,7 +137,9 @@ def read_version(
     reader = spark.read.format(table.format).option("basePath", table.location)
     for k, v in table.format_options:
         reader = reader.option(k, v)
-    if infer_partition_types:
+    if schema is not None:
+        df = reader.schema(schema).load(paths_)
+    elif infer_partition_types:
         df = reader.load(paths_)
     else:
         # the flag is session-global (Spark has no per-read option), so the

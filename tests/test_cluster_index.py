@@ -1168,6 +1168,35 @@ def test_local_components_differential_vs_dedup_clusters(spark):
     assert CX._local_components(spark, dpairs, "doc_id", 1) is None
 
 
+def test_local_components_collated_ids_fall_back(spark):
+    """A collated string id column is "string" by type name, but Spark's
+    min() orders it by the collation: under UTF8_LCASE 'a' < 'B', while
+    Python (codepoint) order puts 'B' first.  The driver union-find must
+    refuse it, so the fold takes the distributed path and labels like
+    Spark's min() does."""
+    pairs = [("B", "a"), ("a", "C"), ("x", "Y"), ("Y", "z")]
+    edges = spark.createDataFrame(
+        pairs, "id_a string collate UTF8_LCASE, id_b string collate UTF8_LCASE"
+    )
+    assert CX._local_components(spark, edges, "doc_id", len(pairs)) is None
+
+    # the fold's fallback (cluster_index: distributed CC on a None result)
+    want = sorted(
+        (r["doc_id"], r["cluster_id"])
+        for r in DD.dedup_clusters(edges).collect()
+    )
+    assert dict(want)["B"] == "a" and dict(want)["Y"] == "x"
+    # the case has teeth: codepoint order labels the same graph otherwise
+    plain = edges.selectExpr(
+        "CAST(id_a AS STRING COLLATE UTF8_BINARY) AS id_a",
+        "CAST(id_b AS STRING COLLATE UTF8_BINARY) AS id_b",
+    )
+    local = sorted(
+        map(tuple, CX._local_components(spark, plain, "doc_id", len(pairs)).collect())
+    )
+    assert dict(local)["a"] == "B" and local != want
+
+
 def test_fold_local_vs_distributed_cc_identical(spark, tmp_path, monkeypatch):
     """Same fold sequence with the driver-side CC (default) and with the
     cap forced to 0 (distributed propagation) — assignment tables must
