@@ -72,7 +72,7 @@ class Partition:
         ``path`` property (used in the commit log) stays raw.  Module-
         level import + the escape fast path keep this ~O(µs): it runs
         once per partition per current-view read, 10⁶ times for a wide
-        table (scripts/measure_read_current.py)."""
+        table (round-14 measurement (script removed; see git history))."""
         base = table_location.rstrip("/")
         frag = "/".join(
             f"{k}={escape_path_name(v)}" for k, v in self.column_values

@@ -48,10 +48,11 @@ def live_paths(table: TableDefinition, table_version) -> List[str]:
     """Concrete directories holding the live data for a resolved state.
 
     This list is the driver-side O(partitions) term of every
-    current-view read (measured: scripts/measure_read_current.py;
-    bound recorded in docs/scale.md "wide-table reads") — built in one
-    pass with ``Partition.path`` computed once per partition, not once
-    for the sort key and again for the directory."""
+    current-view read (measured: round-14 measurement (script removed;
+    see git history); bound recorded in docs/scale.md "wide-table
+    reads") — built in one pass with ``Partition.path`` computed once
+    per partition, not once for the sort key and again for the
+    directory."""
     if isinstance(table_version, SnapshotTableVersion):
         return [vpaths.path_for(table.location, table_version.version)]
     assert isinstance(table_version, PartitionedTableVersion)
@@ -70,12 +71,12 @@ def restrict_partitions(table_version, column: str, values):
     state to the partitions whose ``column`` value is in ``values``
     BEFORE :func:`read_version` materializes the path list.  A
     current-view read pays O(partitions) driver time and memory building
-    the ``load(paths)`` plan (measured at 10⁵–10⁶ partitions in
-    ``scripts/measure_read_current.py``; bound recorded in docs/scale.md
-    "wide-table reads") — a read that needs a slice should prune here,
-    O(selected), and leave row-level filters to the parquet scan's
-    pushdown as usual.  This is the public spelling of the structural
-    pruning the index families already use internally
+    the ``load(paths)`` plan (measured at 10⁵–10⁶ partitions in the
+    round-14 measurement (script removed; see git history); bound
+    recorded in docs/scale.md "wide-table reads") — a read that needs a
+    slice should prune here, O(selected), and leave row-level filters to
+    the parquet scan's pushdown as usual.  This is the public spelling of
+    the structural pruning the index families already use internally
     (``_restrict_to_values``)."""
     wanted = {str(v) for v in values}
     kept = {

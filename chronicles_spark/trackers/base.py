@@ -407,13 +407,24 @@ class VersionTracker(abc.ABC):
             for table in ordered:
                 self._append_commit(table, updates[table])
 
-    def set_current_version(self, table: TableName, commit_id: str) -> None:
+    def set_current_version(self, table: TableName, commit_id: str):
         """Move head to an existing commit — rollback/forward
-        (VersionTracker.scala:71)."""
-        state = self.table_state(table)  # raises UnknownTableError
-        if not any(u.metadata.commit_id == commit_id for u in state.updates):
-            raise UnknownCommitError(commit_id)
+        (VersionTracker.scala:71) — and return the folded table state at
+        it (what ``current_version`` now resolves).
+
+        The target is resolved ONCE through :meth:`version_at`, before the
+        head moves, so an unknown table or commit raises
+        (``UnknownTableError`` / ``UnknownCommitError``) with the head
+        untouched.  On the checkpointed backends (files, sqlite) that is
+        the checkpoint + tail fold, O(distance from the commit to the
+        nearest retained checkpoint at or below it), not O(log).  It
+        degrades to the full-log fold (archive chunks included) exactly
+        where ``version_at`` does: a commit below the archive floor or
+        deeper than the retained checkpoints, a gap-filled prefix,
+        checkpoints disabled, and always on the in-memory tracker."""
+        tv = self.version_at(table, commit_id)
         self._set_head(table, commit_id)
+        return tv
 
     # -- tags (beyond reference parity: git-tag-style data-version pinning) --
     # A tag is an IMMUTABLE named pointer to a commit — "the exact corpus
@@ -442,11 +453,12 @@ class VersionTracker(abc.ABC):
         # set_tag calls cannot both pass the immutability check — same
         # atomicity story (and same unlocked-files caveat) as commits
         with self._serialized_commit(table):
-            state = self.table_state(table)  # raises UnknownTableError
+            # the head pointer alone, or the commit checked on
+            # version_at's O(tail) path; both raise UnknownTableError
             if commit_id is None:
-                commit_id = state.current_version
-            elif not any(u.metadata.commit_id == commit_id for u in state.updates):
-                raise UnknownCommitError(commit_id)
+                commit_id = head_of(self, table)
+            else:
+                self.version_at(table, commit_id)
             if not force and name in self._read_tags(table):
                 raise ValueError(
                     f"tag {name!r} already exists on {table}; tags are "

@@ -4,8 +4,9 @@ Reference: core/src/main/scala/dev/chronicles/core/VersionedMetastore.scala:
 * ``commit`` (:53-66): tracker.commit → tracker.currentVersion →
   metastore.currentVersion → computeChanges → metastore.update; returns
   (TableVersion, changes applied).
-* ``checkout`` (:71-78): tracker.setCurrentVersion → re-fold →
-  diff → metastore.update. Rollback moves NO data (docs/concepts.md:80-82).
+* ``checkout`` (:71-78): tracker.setCurrentVersion (which returns the
+  re-fold) → diff → metastore.update. Rollback moves NO data
+  (docs/concepts.md:80-82).
 """
 
 from __future__ import annotations
@@ -52,9 +53,12 @@ class VersionedMetastore:
     def checkout(
         self, table: TableDefinition, commit_id: str
     ) -> Tuple[object, List[MetastoreOperation]]:
-        """V10 — metadata-only rollback (VersionedMetastore.scala:71-78)."""
-        self.tracker.set_current_version(table.name, commit_id)
-        desired = self.tracker.current_version(table.name)
+        """V10 — metadata-only rollback (VersionedMetastore.scala:71-78).
+        One tracker resolution: ``set_current_version`` resolves the
+        target (O(tail) on checkpointed backends), moves the head and
+        returns the folded state, which is diffed against the metastore.
+        An unknown commit raises before the head or the metastore moves."""
+        desired = self.tracker.set_current_version(table.name, commit_id)
         actual = self.metastore.current_version(table)
         changes = compute_changes(actual, desired)
         self.metastore.update(table, changes)
