@@ -16,6 +16,7 @@ FULL OUTER JOIN lives in ``chronicles_spark.plans.log_queries``
 from __future__ import annotations
 
 from dataclasses import dataclass
+from operator import attrgetter
 from typing import List, Union
 
 from .model import Partition, PartitionedTableVersion, SnapshotTableVersion
@@ -47,6 +48,9 @@ class UpdateTableVersion:
 MetastoreOperation = Union[AddPartition, UpdatePartitionVersion, RemovePartitionOp, UpdateTableVersion]
 
 
+_by_path = attrgetter("partition.path")
+
+
 def compute_changes(current, target) -> List[MetastoreOperation]:
     """Diff current vs. target state (Metastore.scala:56-84)."""
     if isinstance(current, SnapshotTableVersion) and isinstance(target, SnapshotTableVersion):
@@ -56,18 +60,22 @@ def compute_changes(current, target) -> List[MetastoreOperation]:
     if isinstance(current, PartitionedTableVersion) and isinstance(target, PartitionedTableVersion):
         cur = current.partition_versions
         tgt = target.partition_versions
-        ops: List[MetastoreOperation] = []
-        # deterministic order: sorted by partition path (reference emits in map
-        # order; order is irrelevant to the metastore, determinism helps tests)
-        for p in sorted(tgt, key=lambda x: x.path):
-            if p not in cur:
-                ops.append(AddPartition(p, tgt[p]))
-            elif cur[p] != tgt[p]:
-                ops.append(UpdatePartitionVersion(p, tgt[p]))
-        for p in sorted(cur, key=lambda x: x.path):
-            if p not in tgt:
-                ops.append(RemovePartitionOp(p))
-        return ops
+        # deterministic order: adds and updates by partition path, then
+        # removes by path (reference emits in map order; order is irrelevant
+        # to the metastore, determinism helps tests).  Only the emitted ops
+        # are sorted; the sort is stable, so ties keep map order and the
+        # output equals that of sorting every key of both states.
+        changed: List[MetastoreOperation] = []
+        for p, v in tgt.items():
+            old = cur.get(p)
+            if old is None:
+                changed.append(AddPartition(p, v))
+            elif old.label != v.label:
+                changed.append(UpdatePartitionVersion(p, v))
+        removed = [RemovePartitionOp(p) for p in cur if p not in tgt]
+        changed.sort(key=_by_path)
+        removed.sort(key=_by_path)
+        return changed + removed
     raise TypeError(
         f"mismatched table version kinds: {type(current).__name__} vs {type(target).__name__}"
     )

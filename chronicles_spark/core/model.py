@@ -20,6 +20,16 @@ from .version import Version
 _COLVAL_RE = re.compile(r"^([a-z][a-z0-9_]*)=(.+)$")
 _TABLE_NAME_RE = re.compile(r"^([\w\-]+)\.([\w\-]+)$")
 
+# Partition.parse interning, keyed by the exact input string.  Every fold
+# re-parses the same path strings (2,000 per resolution of a 2,000-partition
+# table); handing back the one immutable instance skips the regex and the
+# object construction, and the diff's dict lookups then hit on identity.
+# Only successful parses are stored, so an invalid string raises on every
+# call.  The table is cleared when it reaches the capacity; full, it holds
+# about 38 MiB for two-column paths of ~46 characters.
+_PARSE_CAPACITY = 1 << 16
+_parsed: Dict[str, "Partition"] = {}
+
 
 @dataclass(frozen=True, order=True)
 class TableName:
@@ -97,15 +107,24 @@ class Partition:
 
     @staticmethod
     def parse(s: str) -> "Partition":
-        """Parse ``k1=v1/k2=v2`` (reference: model.scala:13-16, 45-50)."""
-        parts = s.split("/")
+        """Parse ``k1=v1/k2=v2`` (reference: model.scala:13-16, 45-50).
+
+        Interned: equal strings return the same instance (see
+        ``_parsed``)."""
+        hit = _parsed.get(s)
+        if hit is not None:
+            return hit
         out = []
-        for p in parts:
+        for p in s.split("/"):
             m = _COLVAL_RE.match(p)
             if not m:
                 raise ValueError(f"invalid partition string: {s!r}")
-            out.append((m.group(1), m.group(2)))
-        return Partition(tuple(out))
+            out.append(m.groups())
+        part = Partition(tuple(out))
+        if len(_parsed) >= _PARSE_CAPACITY:
+            _parsed.clear()
+        _parsed[s] = part
+        return part
 
 
 @dataclass(frozen=True)

@@ -90,6 +90,28 @@ def apply_ops_to_path_state(state: dict, updates) -> None:
                 state.pop(op.partition.path, None)
 
 
+def check_partition_paths(update: TableUpdate) -> None:
+    """Refuse an update whose partitions would not read back: the files
+    and sqlite logs store each partition as its ``path`` string and fold
+    it back through :meth:`Partition.parse`, so a value holding ``/``, a
+    newline or nothing, or an uppercase column name, would make every
+    later resolution of the table raise (or, for a trailing newline,
+    silently read a different partition).  Raises ``ValueError``; run
+    before anything is written."""
+    for op in update.operations:
+        if isinstance(op, (AddPartitionVersion, RemovePartition)):
+            p = op.partition
+            try:
+                ok = Partition.parse(p.path) == p
+            except ValueError:
+                ok = False
+            if not ok:
+                raise ValueError(
+                    f"partition {p.column_values!r} does not read back from "
+                    f"its log path {p.path!r}"
+                )
+
+
 def _touched_partitions(update: TableUpdate) -> Tuple[Set[Partition], bool]:
     """(partitions this commit writes or removes, touches-whole-table?)."""
     parts: Set[Partition] = set()
@@ -125,6 +147,10 @@ class TableState:
 
 
 class VersionTracker(abc.ABC):
+    #: the log stores partitions as ``path`` strings and parses them back
+    #: on read, so commits go through :func:`check_partition_paths`
+    _logs_partition_paths = True
+
     # -- backend primitives -------------------------------------------------
 
     @abc.abstractmethod
@@ -236,6 +262,8 @@ class VersionTracker(abc.ABC):
         """
         if not self._table_exists(table):
             raise UnknownTableError(table)
+        if self._logs_partition_paths:
+            check_partition_paths(update)
         if expected_head is None:
             self._append_commit(table, update)
             return
@@ -395,6 +423,8 @@ class VersionTracker(abc.ABC):
             for table in ordered:
                 if not self._table_exists(table):
                     raise UnknownTableError(table)
+                if self._logs_partition_paths:
+                    check_partition_paths(updates[table])
             if expected_heads:
                 # ALL conflict checks precede ANY append: a conflict on
                 # the second table must not leave the first one committed

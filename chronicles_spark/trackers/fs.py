@@ -132,7 +132,10 @@ class LocalFileSystem(FileSystem):
         Path(path).mkdir(parents=True, exist_ok=True)
 
     def read_text(self, path: str) -> str:
-        return Path(path).read_text()
+        # plain open(): same locale-default decoding as Path.read_text
+        # without building a PurePath per read (a CDC poll reads hundreds)
+        with open(path) as f:
+            return f.read()
 
     def write_text(self, path: str, text: str) -> None:
         # atomic publish: head_ref is rewritten in place on every commit and

@@ -16,6 +16,10 @@ from .base import TableState, UnknownTableError, VersionTracker
 
 
 class InMemoryVersionTracker(VersionTracker):
+    # the log holds the operation objects themselves and never parses a
+    # path back, so any value (``/`` included) reads back as committed
+    _logs_partition_paths = False
+
     def __init__(self) -> None:
         self._lock = threading.RLock()
         # table → (head commit id, [updates asc])

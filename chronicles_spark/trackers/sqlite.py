@@ -37,6 +37,7 @@ from .base import (
     UnknownTableError,
     VersionTracker,
     apply_ops_to_path_state,
+    check_partition_paths,
 )
 
 # db string tags (DbVersionTracker.scala:288-292)
@@ -236,6 +237,7 @@ class SqliteVersionTracker(VersionTracker):
                 ).fetchone()
                 if row is None:
                     raise UnknownTableError(table)
+                check_partition_paths(updates[table])
             if expected_heads:
                 for table in ordered:
                     if table in expected_heads:

@@ -359,3 +359,49 @@ def test_commit_at_timestamp_resolution(tracker):
     )
     with pytest.raises(UnknownCommitError):
         tracker.commit_at_timestamp(T, t0 - timedelta(seconds=1))
+
+
+@pytest.mark.parametrize(
+    "pair",
+    [("p", "a/b"), ("p", "a\nb"), ("p", ""), ("p", "abc\n"), ("P", "x")],
+    ids=["slash", "newline", "empty", "trailing-newline", "uppercase-column"],
+)
+def test_commit_refuses_partition_that_does_not_read_back(tracker, pair):
+    """A partition whose log path does not parse back to itself would make
+    every later resolution raise (or, for a trailing newline, silently
+    read ``p=abc``): logging backends refuse it before writing anything,
+    on every commit path; the in-memory log holds the objects themselves
+    and reads any value back as committed."""
+    other = TableName("db", "aaa")  # sorts first in a group commit
+    for t in (T, other):
+        tracker.init_table(t, is_snapshot=False, user_id="alice")
+    good, v = Partition.of(("p", "ok")), generate_version()
+    _commit(tracker, AddPartitionVersion(good, v))
+    head = tracker.table_state(T).current_version
+    n_other = len(tracker.table_state(other).updates)
+    bad = Partition.of(pair)
+
+    def update(*ops):
+        return TableUpdate(TableUpdateMetadata.new("alice", "m"), ops)
+
+    if isinstance(tracker, InMemoryVersionTracker):
+        tracker.commit(T, update(AddPartitionVersion(bad, v)))
+        assert tracker.current_version(T) == PartitionedTableVersion({good: v, bad: v})
+        return
+    for op in (AddPartitionVersion(bad, generate_version()), RemovePartition(bad)):
+        fine = AddPartitionVersion(Partition.of(("p", "fine")), generate_version())
+        with pytest.raises(ValueError, match="does not read back"):
+            tracker.commit(T, update(fine, op))
+        with pytest.raises(ValueError, match="does not read back"):
+            tracker.commit(T, update(fine, op), expected_head=head)
+        with pytest.raises(ValueError, match="does not read back"):
+            tracker.commit_group({other: update(fine), T: update(fine, op)})
+        with pytest.raises(ValueError, match="does not read back"):
+            tracker.commit_group(
+                {other: update(fine), T: update(op)}, expected_heads={T: head}
+            )
+    state = tracker.table_state(T)
+    assert state.current_version == head and len(state.updates) == 2
+    assert len(tracker.table_state(other).updates) == n_other
+    assert tracker.current_version(T) == PartitionedTableVersion({good: v})
+    assert tracker.version_at(T, head) == PartitionedTableVersion({good: v})
